@@ -29,8 +29,11 @@ first — a killed job resumes from the last committed level):
 
     <out>/extracted/   bucket=N parquet + per-bucket _manifest/ — the
                        expensive stage, delegated to run_extract's
-                       per-bucket manifest + anti-join resume (waves
-                       bound the in-flight loss; see extract_job.py)
+                       per-bucket manifest + anti-join resume (a wave
+                       holds ~1 GiB of input or a quarter of the
+                       buckets, whichever is more, and bounds the
+                       in-flight loss; each wave rescans the whole
+                       input — see extract_job.py)
     <out>/survivors/   every quality-gate survivor annotated with its
                        is_keeper (exact-dedup election) and contaminated
                        (benchmark 8-gram overlap) decisions — the

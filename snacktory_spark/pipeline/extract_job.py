@@ -32,6 +32,7 @@ import os
 import re
 import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schema import TRANSCRIPT_SCHEMA
@@ -40,6 +41,19 @@ from ..schema import EXTRACTED_SCHEMA
 
 DEFAULT_SALT_SPAN = 64      # turns of one conv kept together per salt unit
 DEFAULT_N_BUCKETS = 64      # output commit granularity
+
+# On-disk input bytes one extraction wave must cover before run_extract
+# splits a job into more waves. A wave's cost has a fixed part: it rescans
+# the WHOLE input (the pmod(xxhash64(conv_id)) bucket filter prunes no row
+# group), commits one dynamic-overwrite write and runs one manifest job.
+# Measured at local[4] on a 4-core VM with sf0.1 (15 MB of parquet; medians
+# of 3 jobs: 13.4 s in 1 wave, 15.8 s in 2, 18.3 s in 4), that fixed part
+# is ~1.6 s per wave, and extraction runs at ~1.3 MB/s of on-disk input.
+# One GiB is then ~14 min of extraction per wave: the fixed part is ~0.2%
+# of it, and a kill loses at most that much work. Smaller waves would cut
+# the loss at a fixed-cost share that grows as the wave shrinks (on sf0.1,
+# four waves cost a third more than one).
+WAVE_INPUT_BYTES = 1 << 30
 
 
 def ensure_py_files(spark: SparkSession) -> None:
@@ -441,20 +455,25 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
                 dedup_texts: bool = False) -> dict:
     """Run (or resume) the extraction job. Returns run metrics.
 
-    Buckets are processed in WAVES of `bucket_batch` (default: quarter of
-    the missing buckets, min 8): each wave is written + manifested before
-    the next starts, so a killed job loses at most one in-flight wave and a
-    resume skips every committed bucket. At 100 TB this is the knob that
-    bounds the blast radius of a failure.
+    Buckets are processed in WAVES: each wave is written + manifested
+    before the next starts, so a killed job loses at most one in-flight
+    wave and a resume skips every committed bucket. Waves are not free:
+    every wave scans the WHOLE input (the bucket filter prunes no row
+    group) and adds one write commit and one manifest job, so a job's scan
+    amplification is waves + 1 (with dedup_texts=True each wave reads the
+    input twice: hash side + distinct side of the self-join). So
+    plan_waves sizes waves by the input's on-disk bytes: one wave per
+    WAVE_INPUT_BYTES, capped at the quarter-of-the-missing-buckets (min 8)
+    plan that bounds the blast radius at 100 TB. An input under
+    WAVE_INPUT_BYTES commits in one wave; an explicit `bucket_batch`
+    overrides the plan.
 
-    The input text column is scanned exactly ONCE per wave (the extract
-    pass itself); with dedup_texts=True it is read twice (hash side +
-    distinct side of the self-join) in exchange for extracting each
-    distinct text once. The extraction UDF is strictly 1-row-in/1-row-out and
-    emits input_bytes + input_file lineage columns, so every manifest
-    metric (rows, input/output bytes, source files) is derived from one
-    scan of the much smaller written output. input_rows counts rows that
-    entered extraction, i.e. after the null/empty-text scan gate.
+    The extraction UDF is strictly 1-row-in/1-row-out and emits
+    input_bytes + input_file lineage columns, so every manifest metric
+    (rows, input/output bytes, source files) is derived from one scan of
+    the much smaller written output. input_rows counts rows that entered
+    extraction, i.e. after the null/empty-text scan gate; input_bytes_est
+    is the on-disk size the wave plan was made from.
 
     files_per_bucket (optional) bounds the sink's file count: without it,
     every UDF partition that holds a bucket's rows writes a file into that
@@ -486,6 +505,23 @@ def run_extract(spark: SparkSession, input_path: str, output_path: str,
         spark.conf.set(_MODE_KEY, prev_mode or "static")
 
 
+def plan_waves(n_missing: int, n_buckets: int, scan_bytes: int,
+               bucket_batch: int | None = None) -> tuple[int, int]:
+    """(input_bytes_est, bucket_batch) for `n_missing` of `n_buckets`
+    buckets of an input of `scan_bytes` on disk.
+
+    Buckets are hash-uniform, so the missing buckets' share of the input
+    is their share of the buckets. One wave per WAVE_INPUT_BYTES of that,
+    never more waves than the quarter-of-the-missing-buckets (min 8) plan;
+    an unknown size (Spark reports Long.MaxValue) keeps that plan, and an
+    explicit `bucket_batch` wins."""
+    est = scan_bytes * n_missing // n_buckets
+    if bucket_batch is None:
+        byte_waves = max(1, -(-est // WAVE_INPUT_BYTES))
+        bucket_batch = max(8, n_missing // 4, -(-n_missing // byte_waves))
+    return est, bucket_batch
+
+
 def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
                        partitions, resume, bucket_batch, files_per_bucket,
                        dedup_texts) -> dict:
@@ -504,8 +540,11 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
     if not missing:
         return {"skipped": True, "completed_buckets": len(done),
                 "stale_buckets_removed": len(stale)}
-    if bucket_batch is None:
-        bucket_batch = max(8, len(missing) // 4)
+    # the scan's on-disk size from plan statistics: runs no Spark job
+    scan_bytes = int(
+        df_all._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    input_bytes_est, bucket_batch = plan_waves(
+        len(missing), n_buckets, scan_bytes, bucket_batch)
 
     df_all = df_all.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
@@ -513,7 +552,8 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
     totals = {"input_rows": 0, "input_bytes": 0, "output_rows": 0,
               "ok_rows": 0, "error_rows": 0, "buckets_written": 0,
               "resumed_buckets_skipped": len(done), "waves": 0,
-              "stale_buckets_removed": len(stale)}
+              "stale_buckets_removed": len(stale),
+              "input_bytes_est": input_bytes_est, "bucket_batch": bucket_batch}
 
     for w in range(0, len(missing), bucket_batch):
         wave = missing[w:w + bucket_batch]
@@ -553,10 +593,15 @@ def _run_extract_waves(spark, input_path, output_path, n_buckets, salt_span,
         try:
             written = (spark.read.schema(written_schema).parquet(output_path)
                        .filter(F.col("bucket").isin(wave)))
-            rows_ok = True
-        except Exception:
-            rows_ok = False  # nothing ever written (e.g. empty input)
-        rows = [] if not rows_ok else (written.groupBy("bucket")
+        except AnalysisException as e:
+            # only a missing output path (nothing was ever written there)
+            # may certify the wave's buckets as empty-and-complete below;
+            # any other read failure would make a resume skip buckets that
+            # hold data
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            written = None
+        rows = [] if written is None else (written.groupBy("bucket")
                 .agg(F.count("*").alias("output_rows"),
                      F.sum("output_bytes").alias("output_bytes"),
                      F.sum("input_bytes").alias("input_bytes"),

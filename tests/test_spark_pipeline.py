@@ -454,6 +454,58 @@ def test_empty_input_completes_and_resumes(spark, tmp_path):
     assert run_extract(spark, src, out, n_buckets=4).get("skipped") is True
 
 
+def test_wave_plan_sized_by_input_bytes():
+    """Waves follow the input's on-disk size, capped at the quarter plan."""
+    from snacktory_spark.pipeline.extract_job import WAVE_INPUT_BYTES, plan_waves
+
+    # an input far below one wave's worth commits in one wave
+    assert plan_waves(64, 64, 1_572_729) == (1_572_729, 64)
+    # unknown size (Long.MaxValue) and >= 4x the constant keep 16 per wave
+    assert plan_waves(64, 64, 2**63 - 1)[1] == 16
+    assert plan_waves(64, 64, 4 * WAVE_INPUT_BYTES)[1] == 16
+    # in between: one wave per WAVE_INPUT_BYTES
+    assert plan_waves(64, 64, 2 * WAVE_INPUT_BYTES)[1] == 32
+    # a resume plans from the missing buckets' share of the input:
+    # 32 of 64 buckets of 6 GiB is 3 GiB -> 3 waves of 11 buckets
+    assert plan_waves(32, 64, 6 * WAVE_INPUT_BYTES) == (3 * WAVE_INPUT_BYTES, 11)
+    # an explicit bucket_batch wins
+    assert plan_waves(64, 64, 1_572_729, bucket_batch=2) == (1_572_729, 2)
+
+
+def test_small_input_extracts_in_one_wave(spark, tmp_path):
+    from snacktory_spark.pipeline.extract_job import run_extract
+
+    src = generate(os.path.join(os.path.dirname(SYNTH), "sf0.01"), sf=0.01)
+    m = run_extract(spark, f"{src}/transcripts.parquet",
+                    str(tmp_path / "out"), n_buckets=64)
+    assert m["waves"] == 1 and m["bucket_batch"] == 64
+    assert 0 < m["input_bytes_est"] < (1 << 30)
+    assert m["buckets_written"] > 0 and m["output_rows"] > 0
+
+
+def test_failed_manifest_read_certifies_nothing(spark, synth_dir, tmp_path,
+                                                monkeypatch):
+    """Only a missing output dir means an empty wave: any other failure to
+    read the written buckets must fail the job, not manifest the wave's
+    buckets as 0-row complete (a resume would skip them forever)."""
+    from pyspark.sql import DataFrameReader
+    from snacktory_spark.pipeline.extract_job import load_manifest, run_extract
+
+    out = str(tmp_path / "out")
+    real_parquet = DataFrameReader.parquet
+
+    def failing_parquet(self, *paths, **kw):
+        if out in paths:
+            raise RuntimeError("simulated read failure")
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_parquet)
+    with pytest.raises(RuntimeError, match="simulated read failure"):
+        run_extract(spark, f"{synth_dir}/transcripts.parquet", out,
+                    n_buckets=4, resume=False)
+    assert load_manifest(out) == {}
+
+
 def test_dedup_and_compaction_compose(spark, synth_dir, tmp_path):
     """dedup_texts + files_per_bucket together: distinct-text extraction,
     bounded file count, full row fan-back."""
